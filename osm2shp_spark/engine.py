@@ -56,12 +56,14 @@ def _export_stage(
 ) -> int:
     """Write one layer-partitioned output and return its row count
     WITHOUT a dedicated post-write ``count()`` rescan (at 100 TB those
-    are real jobs): with lineage on, the count is the sum of the
-    manifest's per-partition ``row_count`` rows (the digest pass reads
-    the written data once anyway — that scan is the lineage feature,
-    not overhead — and the manifest itself is tiny); with lineage off,
-    an ``Observation`` rides the write job itself, so the write is the
-    only job touching the data."""
+    are real jobs): an ``Observation`` rides a job that runs anyway.
+    With lineage on, it sums the per-partition ``row_count`` of the
+    lineage rows as the manifest append writes them (the digest pass
+    reads the written data once anyway — that scan is the lineage
+    feature, not overhead), so no job re-reads the manifest; a zero-row
+    stage counts 0. With lineage off, it counts the rows of the output
+    write itself, so the write is the only job touching the data."""
+    obs = Observation(f"rows_{stage}")
     if with_lineage:
         write_partitioned(df, path, ["layer"])
         # explicit schema: a zero-row partitioned write leaves only
@@ -70,24 +72,16 @@ def _export_stage(
         # landed (an empty extract is a valid outcome, not an error)
         written = spark.read.schema(df.schema).parquet(path).withColumn(
             # digest partition: layer alone funnels an entire layer's
-            # rows into ONE applyInPandas group (OOM/straggler at
-            # scale); bucketing by the stable leading id column bounds
+            # rows into ONE aggregate group (a straggler at scale);
+            # bucketing by the stable leading id column bounds
             # every group while staying deterministic across re-reads
             "part_key",
             F.xxhash64("layer")
             + F.pmod(F.xxhash64(F.col(df.columns[0])), F.lit(256)),
         )
-        manifest.append(partition_lineage(written, stage, "part_key", snapshot))
-        n = (
-            manifest.read()
-            .filter(
-                (F.col("stage") == stage) & (F.col("snapshot_id") == snapshot)
-            )
-            .agg(F.sum("row_count"))
-            .collect()[0][0]
-        )
-        return int(n or 0)
-    obs = Observation(f"rows_{stage}")
+        lineage = partition_lineage(written, stage, "part_key", snapshot)
+        manifest.append(lineage.observe(obs, F.sum("row_count").alias("n")))
+        return int(obs.get["n"] or 0)
     write_partitioned(
         df.observe(obs, F.count(F.lit(1)).alias("n")), path, ["layer"]
     )

@@ -41,10 +41,14 @@ def collapse_barrier(df: DataFrame, keep: tuple = ()) -> DataFrame:
     (measured: way_assembly's reassembly aggregate re-uses the
     ways-build exchange again, 3 Exchanges -> 2, ~0.1 s). Predicates
     referencing ONLY kept columns can still push below the barrier —
-    keep keys, not the expensive derived columns.
+    keep keys, not the expensive derived columns. A ``keep`` name that
+    is not a column of ``df`` raises ``ValueError``.
     """
     from pyspark.sql import functions as F
 
+    missing = [c for c in keep if c not in df.columns]
+    if missing:
+        raise ValueError(f"collapse_barrier keep columns not in df: {missing}")
     keepc = [c for c in df.columns if c in keep]
     rest = [c for c in df.columns if c not in keep]
     if not rest:

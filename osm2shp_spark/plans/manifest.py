@@ -14,16 +14,33 @@ outputs content-addressed so a re-run is verifiable byte-for-byte.
 In production the same module writes to a real Iceberg table via the
 catalog (swap in sources.tables); the layout mirrors Iceberg manifests
 (snapshot id, per-file counts/digests) so the swap is mechanical.
+
+Digest definition (a pure Catalyst aggregate, no Python):
+
+    h      = sha2(to_json(struct(<every column>)), 256)   -- per row
+    s_k    = sum(conv(substr(h, 1 + 16k, 15), 16, 10))    -- k = 0..3
+    digest = sha2(concat_ws(':', row_count, s0, s1, s2, s3), 256)
+
+Each ``s_k`` sums one 60-bit slice of the row hashes as
+``decimal(20,0)`` (a ``bigint`` sum would overflow, and ANSI mode
+raises on that), so the digest is an additive multiset hash:
+insensitive to row order and partitioning, and partially aggregable
+map-side — the exchange carries one row per (map task, part_key)
+instead of every row. ``to_json`` renders binary as base64 and
+handles arrays, maps, nulls and NaN, so any column type digests.
+Earlier manifests hashed a Python ``repr`` of each row inside an
+``applyInPandas`` group; their digests do not compare with these.
+
+``wall_time_s`` stays in :data:`MANIFEST_SCHEMA` so old and new
+manifest files read together, but is now a typed null: there is no
+per-group Python call left to time.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import time
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,53 +49,58 @@ MANIFEST_SCHEMA = (
     "row_count BIGINT, digest STRING, wall_time_s DOUBLE"
 )
 
+# Resume key sets up to this size ride in the plan as an ``isin``
+# literal list; larger ones stay on the executors (see _with_keys).
+_ISIN_MAX_KEYS = 10_000
+
 
 def partition_lineage(
     df: DataFrame, stage: str, part_col: str, snapshot_id: str | None = None
 ) -> DataFrame:
-    """Compute (snapshot_id, stage, part_key, row_count, digest) per
-    value of ``part_col`` — digest is order-insensitive (sum of per-row
-    sha256 prefixes) so it is stable under partition/row reordering.
-    One groupBy shuffle on the partition key; rows hash map-side.
+    """Compute (snapshot_id, stage, part_key, row_count, digest,
+    wall_time_s) per value of ``part_col``. The digest is the additive
+    multiset hash of the module docstring, so it is stable under
+    partition/row reordering. One partially-aggregated groupBy on the
+    partition key; rows hash map-side in the JVM.
     """
     snapshot_id = snapshot_id or uuid.uuid4().hex
-
-    cols = list(df.columns)
-
-    def _cv(v):
-        # numpy array reprs truncate ("..."): canonicalize to tuples
-        if hasattr(v, "tolist") and not isinstance(v, (str, bytes)):
-            return tuple(v.tolist())
-        return v
-
-    def digest_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        hashes = sorted(
-            hashlib.sha256(("|".join(repr(_cv(v)) for v in row)).encode()).digest()
-            for row in pdf[cols].itertuples(index=False, name=None)
-        )
-        d = hashlib.sha256(b"".join(hashes)).hexdigest()
-        return pd.DataFrame(
-            {
-                "part_key": [pdf[part_col].iloc[0]],
-                "row_count": [len(pdf)],
-                "digest": [d],
-                "wall_time_s": [time.time() - t0],
-            }
-        )
-
-    per_part = df.groupBy(part_col).applyInPandas(
-        digest_group,
-        schema="part_key BIGINT, row_count BIGINT, digest STRING, wall_time_s DOUBLE",
+    h = F.sha2(F.to_json(F.struct(*df.columns)), 256)
+    hashed = df.select(F.col(part_col).cast("bigint").alias("part_key"), h.alias("_h"))
+    sums = [
+        F.sum(
+            F.conv(F.substring("_h", 1 + 16 * k, 15), 16, 10).cast("decimal(20,0)")
+        ).alias(f"_s{k}")
+        for k in range(4)
+    ]
+    per_part = hashed.groupBy("part_key").agg(
+        F.count(F.lit(1)).alias("row_count"), *sums
     )
     return per_part.select(
         F.lit(snapshot_id).alias("snapshot_id"),
         F.lit(stage).alias("stage"),
         "part_key",
         "row_count",
-        "digest",
-        "wall_time_s",
+        F.sha2(
+            F.concat_ws(":", "row_count", *[f"_s{k}" for k in range(4)]), 256
+        ).alias("digest"),
+        F.lit(None).cast("double").alias("wall_time_s"),
     )
+
+
+def _with_keys(df: DataFrame, keys: DataFrame, part_col: str) -> DataFrame | None:
+    """Rows of ``df`` whose ``part_col`` is in the one-column frame
+    ``keys``, or None when ``keys`` is empty. Up to ``_ISIN_MAX_KEYS``
+    keys are collected into an ``isin`` filter (parquet can prune on
+    it); past that the driver never holds the key set: it is
+    checkpointed on the executors — so the result cannot drift when
+    the manifest it was derived from changes — and broadcast into a
+    left-semi join."""
+    head = [r[0] for r in keys.limit(_ISIN_MAX_KEYS + 1).collect()]
+    if not head:
+        return None
+    if len(head) <= _ISIN_MAX_KEYS:
+        return df.filter(F.col(part_col).isin(head))
+    return df.join(F.broadcast(keys.localCheckpoint()), part_col, "left_semi")
 
 
 class Manifest:
@@ -151,18 +173,14 @@ def run_stage_resumable(
         # accumulated output on every resume — a full rescan in the
         # common no-orphan case, at odds with the 100 TB resume story.
         done = m.completed_keys(stage).withColumnRenamed("part_key", part_col)
-        orphan_keys = [
-            r[0]
-            for r in spark.read.parquet(out_dir)
+        orphan_keys = (
+            spark.read.parquet(out_dir)
             .select(part_col)
             .distinct()
             .join(F.broadcast(done), part_col, "left_anti")
-            .collect()
-        ]
-        if orphan_keys:
-            orphans = spark.read.parquet(out_dir).filter(
-                F.col(part_col).isin(orphan_keys)
-            )
+        )
+        orphans = _with_keys(spark.read.parquet(out_dir), orphan_keys, part_col)
+        if orphans is not None:
             m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
     todo = m.pending(inp, stage, part_col)
     # persist: referenced by isEmpty, the write, and the key collect —
@@ -173,19 +191,16 @@ def run_stage_resumable(
         if out.isEmpty():
             return out
         out.write.mode("append").parquet(out_dir)
-        # partition keys are coarse units (thousands, not rows): a
-        # driver-side list is the same scale the broadcast anti-join
-        # in pending() already ships
-        new_keys = [r[0] for r in out.select(part_col).distinct().collect()]
+        # Re-read the new slice from disk for both the lineage and the
+        # return value: digests then cover the bytes actually persisted,
+        # and the result survives the manifest append below — the
+        # in-memory lineage would lazily re-evaluate pending() against
+        # the UPDATED manifest on a later action and collapse to empty.
+        # The key set is resolved here, while ``out`` is still cached.
+        written = _with_keys(
+            spark.read.parquet(out_dir), out.select(part_col).distinct(), part_col
+        )
     finally:
         out.unpersist(blocking=False)
-    # Re-read the new slice from disk for both the lineage and the
-    # return value: digests then cover the bytes actually persisted,
-    # and the result survives the manifest append below — the
-    # in-memory lineage would lazily re-evaluate pending() against the
-    # UPDATED manifest on a later action and collapse to empty.
-    written = spark.read.parquet(out_dir).filter(
-        F.col(part_col).isin(new_keys)
-    )
     m.append(partition_lineage(written, stage, part_col, snapshot_id))
     return written

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -36,6 +38,31 @@ class TestRayCast:
             np.array([1.5, 0.5, 2.5]), np.array([2.0, 2.0, 2.0]), x, y
         )
         assert list(inside) == [False, True, True]
+
+    def test_near_horizontal_edge(self):
+        # the bottom edge rises by a subnormal 1e-310: only the first
+        # probe's y lies on its span, the others are far above/below
+        x = np.array([0.0, 10.0, 10.0, 0.0])
+        y = np.array([0.0, 1e-310, 1.0, 1.0])
+        px = np.array([5.0, 5.0, 5.0, 5.0, 20.0])
+        py = np.array([5e-311, 0.5, 1e6, -1e6, 0.5])
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            inside = G.points_in_polygon(px, py, x, y)
+        assert list(inside) == [True, True, False, False, False]
+
+    def test_huge_coordinates(self):
+        # edge differences overflow a float at this scale: the slanted
+        # edge spans 3e308 in x. (0, -0.5) lies below it, inside.
+        s = 1.5e308
+        x = np.array([-s, s, s])
+        y = np.array([-1.0, 1.0, -1.0])
+        px = np.array([0.0, 0.0, -s / 2, s])
+        py = np.array([-0.5, 0.5, -0.75, 2.0])
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            inside = G.points_in_polygon(px, py, x, y)
+        assert list(inside) == [True, False, True, False]
 
 
 class TestDouglasPeucker:

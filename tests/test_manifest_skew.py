@@ -3,6 +3,9 @@ equivalence tests."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -15,6 +18,7 @@ from osm2shp_spark.operators.skew import (
     assemble_ways_salted,
     cell_histogram,
 )
+from osm2shp_spark.plans import manifest as manifest_mod
 from osm2shp_spark.plans.manifest import Manifest, partition_lineage, run_stage_resumable
 from osm2shp_spark.sources.synthetic import (
     synthetic_images,
@@ -69,6 +73,88 @@ def test_lineage_digest_order_insensitive(spark):
     ka = a.sort_values("part_key")[["part_key", "row_count", "digest"]]
     kb = b.sort_values("part_key")[["part_key", "row_count", "digest"]]
     assert ka.values.tolist() == kb.values.tolist()
+
+
+def _digests(lineage) -> dict:
+    return {r.part_key: (r.row_count, r.digest) for r in lineage.collect()}
+
+
+def test_lineage_digest_changes_only_edited_partition(spark):
+    part = (
+        synthetic_images(spark, SF_SMALL)
+        .select("img_key", "image_id", "lon", "lat")
+        .withColumn("part_key", F.col("img_key") % 7)
+    )
+    victim = part.orderBy("img_key").first()
+    edited = part.withColumn(
+        "lon",
+        F.when(F.col("img_key") == victim.img_key, F.col("lon") + 1e-9).otherwise(
+            F.col("lon")
+        ),
+    )
+    a = _digests(partition_lineage(part, "s", "part_key", snapshot_id="x"))
+    b = _digests(partition_lineage(edited, "s", "part_key", snapshot_id="x"))
+    assert a.keys() == b.keys()
+    changed = {k for k in a if a[k] != b[k]}
+    assert changed == {victim.part_key}
+    assert a[victim.part_key][0] == b[victim.part_key][0]
+
+
+def test_lineage_digests_nested_binary_and_null_columns(spark):
+    df = spark.createDataFrame(
+        [
+            (1, b"\x00\xffwkb", [1.0, float("nan")], {"name": "a"}, None),
+            (1, None, None, None, "x"),
+            (2, b"", [], {}, "y"),
+            (2, b"\x01", [None, 2.5], {"k": None}, None),
+        ],
+        "part_key BIGINT, wkb BINARY, lons ARRAY<DOUBLE>, "
+        "tags MAP<STRING,STRING>, name STRING",
+    )
+    got = _digests(partition_lineage(df, "s", "part_key", snapshot_id="x"))
+    assert {k: n for k, (n, _) in got.items()} == {1: 2, 2: 2}
+    assert all(len(d) == 64 for _, d in got.values())
+    assert got[1][1] != got[2][1]
+    # a null and an empty value must not collide
+    swapped = df.withColumn("wkb", F.when(F.col("wkb").isNull(), F.lit(b"")))
+    assert _digests(partition_lineage(swapped, "s", "part_key", "x")) != got
+
+
+def test_lineage_plan_has_no_python_exec(spark):
+    part = (
+        synthetic_images(spark, SF_SMALL)
+        .select("img_key", "image_id", "lon", "lat")
+        .withColumn("part_key", F.col("img_key") % 7)
+    )
+    plan = partition_lineage(part, "s", "part_key")._jdf.queryExecution()
+    text = plan.optimizedPlan().toString() + plan.executedPlan().toString()
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas"):
+        assert node not in text
+
+
+def test_engine_counts_match_written_rows(spark, tmp_path):
+    from osm2shp_spark import engine
+    from osm2shp_spark.sources.synthetic import synthetic_nodes, synthetic_ways
+
+    res = engine.run(
+        spark,
+        synthetic_nodes(spark, SF_SMALL),
+        synthetic_ways(spark, SF_SMALL),
+        str(tmp_path / "out"),
+        images=synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat"),
+        hex_resolutions=(7, 9, 12),
+    )
+    key = {
+        "ways": "exported_ways",
+        "points": "exported_nodes",
+        "images_classified": "classified_images",
+    }
+    for name, path in res.outputs.items():
+        assert res.counts[key[name]] == spark.read.parquet(path).count(), name
+    m = Manifest(spark, str(tmp_path / "out" / "_manifest")).read()
+    sums = m.groupBy("stage").agg(F.sum("row_count").alias("n")).collect()
+    per_stage = {r.stage: r.n for r in sums}
+    assert per_stage == {name: res.counts[key[name]] for name in res.outputs}
 
 
 def test_resume_skips_completed_partitions(spark, tmp_path):
@@ -139,3 +225,44 @@ def test_resume_heals_unrecorded_partitions_without_duplicates(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == n  # no duplicate rows
     m = Manifest(spark, man_dir)
     assert m.pending(df, "heal", "part_key").count() == 0  # manifest healed
+
+
+def _resume_scenario(spark, root):
+    """Partial run, lost manifest (heal), full resume. Returns the
+    final output rows and the manifest's (stage, key, count, digest)."""
+    out_dir, man_dir = os.path.join(root, "out"), os.path.join(root, "manifest")
+    df = (
+        synthetic_images(spark, SF_SMALL)
+        .select("img_key", "image_id", "lon", "lat")
+        .withColumn("part_key", F.col("img_key") % 5)
+    )
+
+    def xform(d):
+        return d.withColumn("lon2", F.col("lon") * 2)
+
+    first = df.filter(F.col("part_key") <= 2)
+    r1 = run_stage_resumable(spark, first, "s", "part_key", xform, out_dir, man_dir)
+    assert r1.count() == first.count()
+    shutil.rmtree(man_dir)
+    r2 = run_stage_resumable(spark, df, "s", "part_key", xform, out_dir, man_dir)
+    assert {r.part_key for r in r2.select("part_key").distinct().collect()} == {3, 4}
+    rows = canon_rows(spark.read.parquet(out_dir).toPandas())
+    lineage = sorted(
+        tuple(r)
+        for r in Manifest(spark, man_dir)
+        .read()
+        .select("stage", "part_key", "row_count", "digest")
+        .collect()
+    )
+    return rows, lineage
+
+
+def test_resume_over_isin_threshold_same_output(spark, tmp_path, monkeypatch):
+    """Past ``_ISIN_MAX_KEYS`` the resume keys stay on the executors
+    (broadcast left-semi join, not a driver ``isin`` list); the healed
+    orphans, the new slice and the manifest must be identical."""
+    small = _resume_scenario(spark, str(tmp_path / "isin"))
+    monkeypatch.setattr(manifest_mod, "_ISIN_MAX_KEYS", 1)
+    big = _resume_scenario(spark, str(tmp_path / "semi"))
+    assert big == small
+    assert len(big[1]) == 5

@@ -276,3 +276,16 @@ def test_pip_dimension_side_has_collapse_barrier(spark):
     )
     p = _plan(pip_join(imgs, rects, ("image_id",), ("rect_id", "layer")))
     assert "inline(array(struct" in p
+
+
+def test_collapse_barrier_rejects_unknown_keep(spark):
+    """A misspelled ``keep`` name must fail loudly: silently dropping
+    it would lose the partitioning reuse it was passed to preserve."""
+    import pytest
+
+    from osm2shp_spark.operators._parallel import collapse_barrier
+
+    df = spark.range(3).withColumn("v", F.col("id") * 2)
+    assert collapse_barrier(df, keep=("id",)).columns == ["id", "v"]
+    with pytest.raises(ValueError, match="nope"):
+        collapse_barrier(df, keep=("id", "nope"))

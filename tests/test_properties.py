@@ -142,7 +142,7 @@ def test_pnpoly_matches_convex_halfplane_oracle(poly_pts, probes):
     cross = np.empty((len(hull), len(px)))
     for i in range(len(hull)):
         cross[i] = (x2[i] - hx[i]) * (py - hy[i]) - (y2[i] - hy[i]) * (px - hx[i])
-    edge_len = np.sqrt((x2 - hx) ** 2 + (y2 - hy) ** 2)
+    edge_len = np.hypot(x2 - hx, y2 - hy)  # no underflow to 0 on tiny edges
     clear = (np.abs(cross) / edge_len[:, None] > 1e-9).all(axis=0)
     if not clear.any():
         return

@@ -36,9 +36,9 @@ def points_in_polygon(
     The ring may be open or closed (first==last); both handled. Points
     exactly on an edge follow the half-open crossing convention
     (deterministic, but fixtures avoid boundary coincidences).
-    Coordinates at or past 2**1023 (half the float range) are halved
-    first, which is exact, so edge differences cannot overflow; below
-    that the arithmetic is bit-identical to ``spatial.pnpoly_sql``.
+    The arithmetic is bit-identical to ``spatial.pnpoly_sql``: near
+    1e308 edge differences overflow to inf as they do in the JVM, and
+    the result is whatever IEEE gives, without a warning.
     """
     px = np.asarray(px, np.float64)
     py = np.asarray(py, np.float64)
@@ -50,19 +50,17 @@ def points_in_polygon(
     inside = np.zeros(len(px), dtype=bool)
     if n < 3:
         return inside
-    big = max(np.abs(a).max(initial=0.0) for a in (px, py, x, y))
-    if big >= 2.0**1023:
-        px, py, x, y = px / 2, py / 2, x / 2, y / 2
     x1, y1 = x, y
     x2, y2 = np.roll(x, -1), np.roll(y, -1)
-    for i in range(n):
-        idx = np.flatnonzero((y1[i] > py) != (y2[i] > py))
-        if not idx.size:
-            continue
-        # crossing points only: their py lies between y1 and y2, so
-        # |t| <= 1 even on a near-horizontal edge
-        t = (py[idx] - y1[i]) / (y2[i] - y1[i])
-        inside[idx] ^= px[idx] < x1[i] + t * (x2[i] - x1[i])
+    with np.errstate(over="ignore", invalid="ignore"):
+        for i in range(n):
+            idx = np.flatnonzero((y1[i] > py) != (y2[i] > py))
+            if not idx.size:
+                continue
+            # crossing points only: their py lies between y1 and y2, so
+            # |t| <= 1 even on a near-horizontal edge
+            t = (py[idx] - y1[i]) / (y2[i] - y1[i])
+            inside[idx] ^= px[idx] < x1[i] + t * (x2[i] - x1[i])
     return inside
 
 

@@ -17,7 +17,7 @@ catalog (swap in sources.tables); the layout mirrors Iceberg manifests
 
 Digest definition (a pure Catalyst aggregate, no Python):
 
-    h      = sha2(to_json(struct(<every column>)), 256)   -- per row
+    h      = sha2(to_json(struct(<every column>), _JSON), 256)  -- per row
     s_k    = sum(conv(substr(h, 1 + 16k, 15), 16, 10))    -- k = 0..3
     digest = sha2(concat_ws(':', row_count, s0, s1, s2, s3), 256)
 
@@ -27,7 +27,10 @@ raises on that), so the digest is an additive multiset hash:
 insensitive to row order and partitioning, and partially aggregable
 map-side — the exchange carries one row per (map task, part_key)
 instead of every row. ``to_json`` renders binary as base64 and
-handles arrays, maps, nulls and NaN, so any column type digests.
+handles arrays, maps, nulls and NaN. Its default timestamp format
+keeps only milliseconds and follows the session time zone, so
+``_JSON`` pins microseconds and UTC: digests then do not depend on
+``spark.sql.session.timeZone``.
 Earlier manifests hashed a Python ``repr`` of each row inside an
 ``applyInPandas`` group; their digests do not compare with these.
 
@@ -49,9 +52,12 @@ MANIFEST_SCHEMA = (
     "row_count BIGINT, digest STRING, wall_time_s DOUBLE"
 )
 
-# Resume key sets up to this size ride in the plan as an ``isin``
-# literal list; larger ones stay on the executors (see _with_keys).
-_ISIN_MAX_KEYS = 10_000
+# to_json options for the row hash: microsecond timestamps in UTC
+_JSON = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "timeZone": "UTC",
+}
 
 
 def partition_lineage(
@@ -64,7 +70,7 @@ def partition_lineage(
     partition key; rows hash map-side in the JVM.
     """
     snapshot_id = snapshot_id or uuid.uuid4().hex
-    h = F.sha2(F.to_json(F.struct(*df.columns)), 256)
+    h = F.sha2(F.to_json(F.struct(*df.columns), _JSON), 256)
     hashed = df.select(F.col(part_col).cast("bigint").alias("part_key"), h.alias("_h"))
     sums = [
         F.sum(
@@ -85,22 +91,6 @@ def partition_lineage(
         ).alias("digest"),
         F.lit(None).cast("double").alias("wall_time_s"),
     )
-
-
-def _with_keys(df: DataFrame, keys: DataFrame, part_col: str) -> DataFrame | None:
-    """Rows of ``df`` whose ``part_col`` is in the one-column frame
-    ``keys``, or None when ``keys`` is empty. Up to ``_ISIN_MAX_KEYS``
-    keys are collected into an ``isin`` filter (parquet can prune on
-    it); past that the driver never holds the key set: it is
-    checkpointed on the executors — so the result cannot drift when
-    the manifest it was derived from changes — and broadcast into a
-    left-semi join."""
-    head = [r[0] for r in keys.limit(_ISIN_MAX_KEYS + 1).collect()]
-    if not head:
-        return None
-    if len(head) <= _ISIN_MAX_KEYS:
-        return df.filter(F.col(part_col).isin(head))
-    return df.join(F.broadcast(keys.localCheckpoint()), part_col, "left_semi")
 
 
 class Manifest:
@@ -137,6 +127,23 @@ class Manifest:
         return df.join(F.broadcast(done), part_col, "left_anti")
 
 
+def _unrecorded_keys(
+    spark: SparkSession, m: Manifest, stage: str, out_dir: str, part_col: str
+) -> DataFrame:
+    """Distinct ``part_col`` values in ``out_dir`` with no ``stage``
+    entry in the manifest: a column-pruned scan anti-joined against the
+    broadcast manifest keys. Both parquet listings are taken here, at
+    plan time, so later appends to either directory do not change what
+    the frame evaluates to."""
+    done = m.completed_keys(stage).withColumnRenamed("part_key", part_col)
+    return (
+        spark.read.parquet(out_dir)
+        .select(part_col)
+        .distinct()
+        .join(F.broadcast(done), part_col, "left_anti")
+    )
+
+
 def run_stage_resumable(
     spark: SparkSession,
     inp: DataFrame,
@@ -152,6 +159,12 @@ def run_stage_resumable(
     ``transform(df) -> df`` must be partition-wise in ``part_col``
     (each output row keeps its input partition key). Returns the
     newly-written slice (empty when fully resumed).
+
+    Resume keys are not collected into a literal ``isin`` list: rows
+    are selected with a broadcast left-semi join against the unrecorded
+    keys, so the plan does not grow with the number of keys. (The
+    broadcast still relays the keys through the driver, at the scale
+    of the broadcast anti-join in :meth:`Manifest.pending`.)
     """
     m = Manifest(spark, manifest_dir)
     # Heal the append-then-record crash window: data lands in out_dir
@@ -164,43 +177,33 @@ def run_stage_resumable(
     if os.path.isdir(out_dir) and any(
         f.endswith(".parquet") for f in os.listdir(out_dir)
     ):
-        # Short-circuit cheaply (r6, ADVICE r5): compare the DISTINCT
-        # partition keys on disk (a column-pruned partial-agg scan —
-        # parquet reads only the key column's pages) against the
-        # manifest, and only read FULL rows for the orphan keys that
-        # actually need lineage digests. The previous shape anti-joined
-        # whole rows and isEmpty()-scanned the stage's entire
-        # accumulated output on every resume — a full rescan in the
-        # common no-orphan case, at odds with the 100 TB resume story.
-        done = m.completed_keys(stage).withColumnRenamed("part_key", part_col)
-        orphan_keys = (
-            spark.read.parquet(out_dir)
-            .select(part_col)
-            .distinct()
-            .join(F.broadcast(done), part_col, "left_anti")
-        )
-        orphans = _with_keys(spark.read.parquet(out_dir), orphan_keys, part_col)
-        if orphans is not None:
+        # Short-circuit cheaply (r6, ADVICE r5): the emptiness check
+        # reads only the key column's pages, and FULL rows are read
+        # only for orphan keys that actually need lineage digests.
+        orphan_keys = _unrecorded_keys(spark, m, stage, out_dir, part_col)
+        if not orphan_keys.isEmpty():
+            orphans = spark.read.parquet(out_dir).join(
+                F.broadcast(orphan_keys), part_col, "left_semi"
+            )
             m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
     todo = m.pending(inp, stage, part_col)
-    # persist: referenced by isEmpty, the write, and the key collect —
-    # one evaluation, and a transform that is not bit-deterministic
-    # across recomputations cannot record keys it did not write
+    # persist: referenced by isEmpty and the write — one evaluation
     out = transform(todo).persist()
     try:
         if out.isEmpty():
             return out
         out.write.mode("append").parquet(out_dir)
-        # Re-read the new slice from disk for both the lineage and the
-        # return value: digests then cover the bytes actually persisted,
-        # and the result survives the manifest append below — the
-        # in-memory lineage would lazily re-evaluate pending() against
-        # the UPDATED manifest on a later action and collapse to empty.
-        # The key set is resolved here, while ``out`` is still cached.
-        written = _with_keys(
-            spark.read.parquet(out_dir), out.select(part_col).distinct(), part_col
-        )
     finally:
         out.unpersist(blocking=False)
+    # Re-read the new slice from disk for both the lineage and the
+    # return value, so digests cover the bytes actually persisted. Every
+    # key on disk before this write is recorded (healed above), so the
+    # new slice is exactly the unrecorded keys. Their manifest listing
+    # is taken before the append below, so the returned frame keeps
+    # evaluating to this slice afterwards.
+    new_keys = _unrecorded_keys(spark, m, stage, out_dir, part_col)
+    written = spark.read.parquet(out_dir).join(
+        F.broadcast(new_keys), part_col, "left_semi"
+    )
     m.append(partition_lineage(written, stage, part_col, snapshot_id))
     return written

@@ -18,7 +18,6 @@ from osm2shp_spark.operators.skew import (
     assemble_ways_salted,
     cell_histogram,
 )
-from osm2shp_spark.plans import manifest as manifest_mod
 from osm2shp_spark.plans.manifest import Manifest, partition_lineage, run_stage_resumable
 from osm2shp_spark.sources.synthetic import (
     synthetic_images,
@@ -118,6 +117,31 @@ def test_lineage_digests_nested_binary_and_null_columns(spark):
     # a null and an empty value must not collide
     swapped = df.withColumn("wkb", F.when(F.col("wkb").isNull(), F.lit(b"")))
     assert _digests(partition_lineage(swapped, "s", "part_key", "x")) != got
+
+
+def test_lineage_digests_timestamps_to_the_microsecond(spark):
+    micros = 1_700_000_000_123_456
+    df = spark.range(4).select(
+        (F.col("id") % 2).alias("part_key"),
+        F.timestamp_micros(F.lit(micros) + F.col("id")).alias("ts"),
+        F.array(F.timestamp_micros(F.lit(micros))).alias("tss"),
+    )
+    # rows 0 and 1 differ only in the microsecond of ts
+    shifted = df.withColumn(
+        "ts",
+        F.when(F.col("part_key") == 0, F.col("ts") + F.expr("INTERVAL 1 MICROSECOND"))
+        .otherwise(F.col("ts")),
+    )
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = _digests(partition_lineage(df, "s", "part_key", "x"))
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        assert _digests(partition_lineage(df, "s", "part_key", "x")) == utc
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    moved = _digests(partition_lineage(shifted, "s", "part_key", "x"))
+    assert moved[1] == utc[1] and moved[0] != utc[0]
 
 
 def test_lineage_plan_has_no_python_exec(spark):
@@ -227,25 +251,21 @@ def test_resume_heals_unrecorded_partitions_without_duplicates(spark, tmp_path):
     assert m.pending(df, "heal", "part_key").count() == 0  # manifest healed
 
 
-def _resume_scenario(spark, root):
-    """Partial run, lost manifest (heal), full resume. Returns the
-    final output rows and the manifest's (stage, key, count, digest)."""
+def _resume_run(spark, root, df, xform, split):
+    """Run ``df`` through run_stage_resumable in one go (``split`` None)
+    or as a partial run of keys <= split, a lost manifest (so the
+    resume heals it from disk) and a full resume. Returns the output
+    rows and the manifest's (stage, key, count, digest) lines."""
     out_dir, man_dir = os.path.join(root, "out"), os.path.join(root, "manifest")
-    df = (
-        synthetic_images(spark, SF_SMALL)
-        .select("img_key", "image_id", "lon", "lat")
-        .withColumn("part_key", F.col("img_key") % 5)
-    )
-
-    def xform(d):
-        return d.withColumn("lon2", F.col("lon") * 2)
-
-    first = df.filter(F.col("part_key") <= 2)
-    r1 = run_stage_resumable(spark, first, "s", "part_key", xform, out_dir, man_dir)
-    assert r1.count() == first.count()
-    shutil.rmtree(man_dir)
+    if split is not None:
+        first = df.filter(F.col("part_key") <= split)
+        r1 = run_stage_resumable(spark, first, "s", "part_key", xform, out_dir, man_dir)
+        assert r1.count() == first.count()
+        shutil.rmtree(man_dir)
     r2 = run_stage_resumable(spark, df, "s", "part_key", xform, out_dir, man_dir)
-    assert {r.part_key for r in r2.select("part_key").distinct().collect()} == {3, 4}
+    # the returned slice is evaluated after the manifest append
+    rest = df if split is None else df.filter(F.col("part_key") > split)
+    assert r2.count() == rest.count()
     rows = canon_rows(spark.read.parquet(out_dir).toPandas())
     lineage = sorted(
         tuple(r)
@@ -257,12 +277,19 @@ def _resume_scenario(spark, root):
     return rows, lineage
 
 
-def test_resume_over_isin_threshold_same_output(spark, tmp_path, monkeypatch):
-    """Past ``_ISIN_MAX_KEYS`` the resume keys stay on the executors
-    (broadcast left-semi join, not a driver ``isin`` list); the healed
-    orphans, the new slice and the manifest must be identical."""
-    small = _resume_scenario(spark, str(tmp_path / "isin"))
-    monkeypatch.setattr(manifest_mod, "_ISIN_MAX_KEYS", 1)
-    big = _resume_scenario(spark, str(tmp_path / "semi"))
-    assert big == small
-    assert len(big[1]) == 5
+def test_resume_after_heal_matches_one_shot_run(spark, tmp_path):
+    """Healed orphans, the resumed slice and their lineage are the
+    same as a single uninterrupted run's."""
+    df = (
+        synthetic_images(spark, SF_SMALL)
+        .select("img_key", "image_id", "lon", "lat")
+        .withColumn("part_key", F.col("img_key") % 5)
+    )
+
+    def xform(d):
+        return d.withColumn("lon2", F.col("lon") * 2)
+
+    once = _resume_run(spark, str(tmp_path / "once"), df, xform, None)
+    resumed = _resume_run(spark, str(tmp_path / "resumed"), df, xform, 2)
+    assert resumed == once
+    assert len(once[1]) == 5

@@ -362,6 +362,31 @@ def test_pnpoly_sql_bit_parity_randomized(spark):
     assert got == set(expect)
 
 
+def test_pnpoly_sql_matches_kernel_at_huge_coordinates(spark):
+    """Near 1e308 the edge differences overflow to inf; the JVM refine
+    must overflow the same way as the NumPy kernel (and not raise)."""
+    from osm2shp_spark.operators.spatial import _with_ring_edges, pnpoly_sql
+
+    s = 1.5e308
+    ring = {"lons": [-s, s, s], "lats": [-1.0, 1.0, -1.0]}
+    px = np.array([0.0, 0.0, -s / 2, s, 1e308])
+    py = np.array([-0.5, 0.5, -0.75, 2.0, -1e308])
+    expect = G.points_in_polygon(px, py, np.array(ring["lons"]), np.array(ring["lats"]))
+    polys = _with_ring_edges(
+        spark.createDataFrame([ring], "lons ARRAY<DOUBLE>, lats ARRAY<DOUBLE>")
+    )
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(px)), "_px": px, "_py": py})
+    )
+    got = {
+        r.pid: r.inside
+        for r in pts.crossJoin(polys.select("_edges"))
+        .select("pid", F.expr(pnpoly_sql("_px", "_py")).alias("inside"))
+        .collect()
+    }
+    assert [got[i] for i in range(len(px))] == expect.tolist()
+
+
 class TestKnnTileWindow:
     """The exchange-reuse window spec (tile_window) must be invisible in
     results and visible in the plan (one fewer Exchange in the shuffle-

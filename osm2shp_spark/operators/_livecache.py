@@ -1,9 +1,9 @@
 """Bounded registry for operator-internal persisted DataFrames.
 
 Several operators persist an internal intermediate that is referenced
-more than once by the (lazy) result they return — knn_join's top-k
-summary, adaptive_cells' per-level input, the near-dup operators'
-signature tables. CacheManager holds persisted plans until an explicit
+more than once by the (lazy) result they return — the kNN shuffle
+path's top-k summary, adaptive_cells' per-level input, the near-dup
+operators' signature tables. CacheManager holds persisted plans until an explicit
 unpersist (ContextCleaner only reclaims RDD-level state), and the
 operator cannot unpersist eagerly because the returned DataFrame still
 references the cache — so a long-lived session calling the operator in

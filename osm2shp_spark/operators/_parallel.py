@@ -60,6 +60,18 @@ def collapse_barrier(df: DataFrame, keep: tuple = ()) -> DataFrame:
 
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
+    """``df`` unchanged when it already has at least
+    ``defaultParallelism`` partitions, else round-robin repartitioned
+    to that many (see the module docstring).
+
+    PRECONDITION: ``df`` is a scan-only plan — scans plus narrow
+    operators (filter, project, union), no Exchange. The partition
+    count comes from ``df.rdd.getNumPartitions()``; on a plan with an
+    exchange, AQE materializes the upstream shuffle stages to finalize
+    the plan, so the probe itself would run jobs. Apply it right after
+    the read, before any join or aggregate. Under Spark Connect (no
+    RDD access) it returns ``df`` as-is.
+    """
     spark = df.sparkSession
     try:
         parts = df.rdd.getNumPartitions()

@@ -139,7 +139,7 @@ def adaptive_cells(
         # re-evaluates the previous level's full union (with its
         # Arrow re-index) ~3x — compounding 3^levels upstream
         # recomputations. The LRU registry bounds live cache entries
-        # across calls exactly like knn_join's summary registry.
+        # across calls exactly like the kNN summary registry.
         out = out.persist()
         _register_level(out)
         hist = cell_histogram(

@@ -19,11 +19,11 @@ Two cell schemes coexist:
 Exactness: PIP refines with the ray-cast kernel; kNN is *provably*
 exact — after the 3x3-tile candidate pass, any point that cannot show
 k neighbors inside the guaranteed-covered radius (distance to the
-explored-region boundary) falls back to a full search: broadcast when
-the feature table fits the budget, widening super-tile ring joins
-when it does not (r6 — never a full-table broadcast in the shuffle
-regime). The oracle comparison (vs brute force SQL) checks this end
-to end.
+explored-region boundary) falls back to a wider search: a batched
+full scan of the broadcast feature arrays when the feature table fits
+the budget, widening super-tile ring joins when it does not (r6 —
+never a full-table broadcast in the shuffle regime). The oracle
+comparison (vs brute force SQL) checks this end to end.
 """
 
 from __future__ import annotations
@@ -579,74 +579,32 @@ def _is_axis_rect(rx: np.ndarray, ry: np.ndarray) -> bool:
 # N4: exact kNN nearest-feature join
 # ---------------------------------------------------------------------------
 
-def _estimated_plan_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for a plan (the number the planner
-    compares against autoBroadcastJoinThreshold). Driver-side metadata
-    only — no job."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _autobroadcast_threshold(spark) -> int:
-    """Session autoBroadcastJoinThreshold in bytes (-1 = disabled)."""
-    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
-
-
-def _resolve_tile_window(spark, feats: DataFrame) -> bool:
-    """The knn_join window-spec gate: True (tile-prefixed window, the
-    exchange-reuse spec) exactly when the planner would NOT broadcast
-    the exploded feature side — threshold disabled, or Catalyst's size
-    estimate above it (the planner's own broadcast test).
-
-    The size probe uses classic-only JVM internals (``_jdf``); under
-    Spark Connect they don't exist (AttributeError), so degrade to
-    ``True`` — correct in both regimes (identical results either way;
-    in the broadcast regime the two carried tile ints cost ~10%, vs
-    raising on every Connect call). Only that signature is caught:
-    a real JVM/Py4J failure should surface, not silently flip the
-    plan choice."""
-    try:
-        thresh = _autobroadcast_threshold(spark)
-        return thresh < 0 or _estimated_plan_bytes(feats) > thresh
-    except AttributeError:
-        return True
-
-
 #: broadcast budget for the feature side of kNN (rows ≈ 24 B each)
 MAX_BROADCAST_FEATURES = 10_000_000
 
 
-def knn_join(
+def _knn_shuffle(
     points: DataFrame,
     features: DataFrame,
     k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
-    tile_size: float = TILE_SIZE,
-    tile_window: bool | None = None,
-    max_broadcast_features: int | None = MAX_BROADCAST_FEATURES,
-    features_count: int | None = None,
+    point_id: str,
+    feature_id: str,
+    tile_size: float,
 ) -> DataFrame:
-    """Exact k nearest features per point → (point_id, rank, feature_id,
-    dist2). Local equirectangular metric (see COS_REF), ties broken by
-    feature id — fully deterministic.
+    """Shuffle path of :func:`knn_join_auto` (feature table over the
+    broadcast budget) → (point_id, rank, feature_id, dist2).
 
-    Scale path: points explode to their 3x3 tile neighborhood and
-    equi-join features on tile (shuffle-friendly, skew handled by AQE).
-    A point's result is provably exact when its kth distance is within
-    the guaranteed-covered radius (one full tile ring in the scaled
-    metric); the remainder falls back to a full search over the
-    feature table — broadcast when the feature table fits
-    ``max_broadcast_features`` (default :data:`MAX_BROADCAST_FEATURES`,
-    the R32/R37 budget contract; ``None`` = caller-asserted in budget), else
-    iterative tile-ring expansion (:func:`_knn_ring_expand` — never a
-    full-table broadcast in the very regime where the planner refused
-    one). The fallback subtree is built only when the materialized
-    top-k summary actually contains unresolved points, so the common
-    all-resolved case executes no broadcast exchange at all; the
-    summary count also means this function triggers the candidate
-    join eagerly (the result DataFrame then reads the persisted
-    summary). ``features_count``: pass a known row count to skip the
-    budget count pre-pass (``knn_join_auto`` already paid it).
+    Features explode to their 3x3 tile neighborhood and equi-join
+    points on tile (shuffle-friendly, skew handled by AQE). A point's
+    result is provably exact when its kth distance is within the
+    guaranteed-covered radius (one full tile ring in the scaled
+    metric); the remainder resolves by iterative tile-ring expansion
+    (:func:`_knn_ring_expand` — never a full-table broadcast in the
+    very regime where the feature table failed the budget). The
+    fallback subtree is built only when the materialized top-k summary
+    actually contains unresolved points; the summary count also means
+    this function triggers the candidate join eagerly (the result
+    DataFrame then reads the persisted summary).
 
     Candidate diet (r6): the provable-radius cut ``dist2 <= rho2``
     rides the tile join's condition, so candidates beyond the
@@ -658,21 +616,15 @@ def knn_join(
     row for points with no in-radius candidate, which keeps the
     single-scan unresolved bookkeeping intact).
 
-    ``tile_window``: key the per-point top-k aggregate by
-    ``(tile_x, tile_y, _pid)`` instead of ``_pid``. Identical results —
-    a point sits in exactly one tile, so the groups are the same — but
-    in the shuffle-join regime (planet-scale feature table, no
-    broadcast) HashPartitioning(tile) already satisfies the aggregate's
-    ClusteredDistribution (subset rule) and candidates never leave
-    their join partition (measured 4x at sf0.1 during the r5 rewrite,
-    commit 3cd18e5; plan-asserted in tests/test_spatial.py
-    TestKnnTileWindow). When the feature side broadcasts (the
-    small-dimension regime) the point table is instead pre-partitioned
-    by ``_pid`` so the broadcast join preserves the clustering the
-    aggregate needs — 1x point rows on the wire, nothing post-join.
-    ``None`` auto-picks by comparing Catalyst's size estimate of the
-    exploded feature side against the session broadcast threshold (the
-    planner's own test).
+    The per-point top-k aggregate is keyed by ``(tile_x, tile_y,
+    _pid)``, not ``_pid``. Identical groups — a point sits in exactly
+    one tile — but the join's HashPartitioning(tile) already satisfies
+    the aggregate's ClusteredDistribution (subset rule), so candidates
+    never leave their join partition (measured 4x at sf0.1 during the
+    r5 rewrite, commit 3cd18e5; plan-asserted in tests/test_spatial.py
+    TestKnnShufflePlan). Over the broadcast budget the 9x exploded
+    feature side (> 90M rows) is far above the session's
+    autoBroadcastJoinThreshold, so the planner picks a shuffle join.
     """
     # the ±1-tile neighborhood explode rides the FEATURE side: a
     # feature in tile t is a candidate for points in t's 3x3 ring ⟺
@@ -700,8 +652,6 @@ def knn_join(
         "tile_y",
     )
     d2 = dist2_expr("_plon", "_plat", "_flon", "_flat")
-    if tile_window is None:
-        tile_window = _resolve_tile_window(points.sparkSession, feats)
     # Per-point top-k as an AGGREGATE (slice(array_sort(collect_list)))
     # instead of a row_number window. Equivalent ordering — array_sort
     # on struct(dist2, _fid) is the same (dist2 ASC, _fid ASC) total
@@ -712,28 +662,16 @@ def knn_join(
     # path replaces that one big row sort with a codegen'd array_sort
     # per point (~ring-count elements each). Measured at sf0.1
     # local[32] during the r5 rewrite (commit 3cd18e5): topk-stage
-    # shuffle regime 5.56s -> 1.36s, broadcast regime 8.09s -> 2.04s.
+    # shuffle regime 5.56s -> 1.36s.
     #
-    # Exchange accounting per regime (the 100 TB story):
-    # - shuffle regime (tile_window=True): groupBy(tile_x, tile_y,
-    #   _pid) reuses the join's HashPartitioning(tile) via the subset
-    #   rule — candidates NEVER cross the wire (plan-asserted in
-    #   tests/test_spatial.py TestKnnTileWindow), only the k survivors
-    #   per point move on.
-    # - broadcast regime: repartition the POINT table by _pid before
-    #   the join (1x point rows on the wire — less than the window
-    #   path's truncated candidate exchange) so the broadcast join
-    #   preserves HashPartitioning(_pid) and the agg needs no
-    #   post-join exchange either.
-    # - BOTH regimes scan the point table exactly once: the tile join
-    #   is LEFT outer, so zero-candidate points reach the persisted
-    #   topk summary and the brute-fallback set is read off that
-    #   summary instead of a second full-table anti-join scan.
-    if tile_window:
-        cand_src, agg_keys = pts, ["tile_x", "tile_y", "_pid"]
-    else:
-        cand_src, agg_keys = pts.repartition("_pid"), ["_pid"]
-    cand_keys = ["tile_x", "tile_y"] if tile_window else []
+    # groupBy(tile_x, tile_y, _pid) reuses the join's
+    # HashPartitioning(tile) via the subset rule — candidates NEVER
+    # cross the wire, only the k survivors per point move on. The point
+    # table is scanned exactly once: the tile join is LEFT outer, so
+    # zero-candidate points reach the persisted topk summary and the
+    # fallback set is read off that summary instead of a second
+    # full-table anti-join scan.
+    tile_keys = ["tile_x", "tile_y"]
     # guaranteed covered radius: one tile in every direction; lon tiles
     # shrink by COS_REF in the scaled metric
     rho2 = (tile_size * COS_REF) ** 2
@@ -750,18 +688,18 @@ def knn_join(
     # the fallback — so dropping them here is result-identical and
     # starves the aggregate of ~3/4 of its input (measured sf0.1:
     # 8.67M -> 2.12M candidate rows; see docstring).
-    p, f = cand_src.alias("p"), feats.alias("f")
+    p, f = pts.alias("p"), feats.alias("f")
     cond = (
         (F.col("p.tile_x") == F.col("f.tile_x"))
         & (F.col("p.tile_y") == F.col("f.tile_y"))
         & (F.expr(d2) <= F.lit(rho2))
     )
     cand = p.join(f, cond, "left").select(
-        *[F.col(f"p.{c}").alias(c) for c in cand_keys],
+        *[F.col(f"p.{c}").alias(c) for c in tile_keys],
         "_pid", "_plon", "_plat", "_fid", F.expr(d2).alias("dist2"),
     )
     topk = (
-        cand.groupBy(*agg_keys)
+        cand.groupBy(*tile_keys, "_pid")
         .agg(
             # when() guards the null-candidate rows of the left join:
             # when -> NULL entries, which collect_list skips
@@ -814,51 +752,19 @@ def knn_join(
             F.col("h.dist2").alias("dist2"),
         )
     )
-    # fallback: full search for unresolved points, read off the
-    # persisted summary — NOT a second scan of the point table. The
+    # fallback: ring-expanding search for unresolved points, read off
+    # the persisted summary — NOT a second scan of the point table. The
     # count below materializes the summary (one job; every downstream
     # consumer then reads the cache) and gates the whole fallback
     # subtree: when nothing is unresolved the returned plan contains
-    # no broadcast/ring machinery at all — an un-executed-but-planned
-    # BroadcastExchange of the feature table still builds its relation
-    # at runtime (AQE cannot prune it: emptiness isn't known at plan
-    # time), which is exactly the unguarded exchange this removes.
+    # no ring machinery at all.
     unresolved = topk.filter(F.col("_n") < k).select("_pid", "_plon", "_plat")
     _register_summary(topk)
     if unresolved.count() == 0:
         return solved
-    if features_count is None and max_broadcast_features is not None:
-        features_count = features.count()
-    if (
-        max_broadcast_features is None
-        or features_count <= max_broadcast_features
-    ):
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_pid").orderBy(
-            F.col("dist2").asc(), F.col("_fid").asc()
-        )
-        allfeats = features.select(
-            F.col(feature_id).alias("_fid"),
-            F.col("lon").alias("_flon"),
-            F.col("lat").alias("_flat"),
-        )
-        brute = (
-            unresolved.crossJoin(F.broadcast(allfeats))
-            .select("_pid", "_fid", F.expr(d2).alias("dist2"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("_pid").alias(point_id),
-                "rank",
-                F.col("_fid").alias(feature_id),
-                "dist2",
-            )
-        )
-    else:
-        brute = _knn_ring_expand(
-            unresolved, features, k, point_id, feature_id, tile_size
-        )
+    brute = _knn_ring_expand(
+        unresolved, features, k, point_id, feature_id, tile_size
+    )
     return solved.unionByName(brute)
 
 
@@ -1034,8 +940,8 @@ def _knn_ring_expand(
 #: live persisted top-k summaries, oldest first. CacheManager holds
 #: persisted plans until explicit unpersist (ContextCleaner only
 #: reclaims RDD-level state), so without a bound a long-lived session
-#: calling knn_join in a loop accumulates one O(points) cache entry
-#: per call. A result-lifetime hook (weakref.finalize on the returned
+#: calling the kNN shuffle path in a loop accumulates one O(points)
+#: cache entry per call. A result-lifetime hook (weakref.finalize on the returned
 #: DataFrame) is the obvious alternative but breaks under composition:
 #: any ``.select()``/``union`` wrapper drops the Python object before
 #: materialization and the summary would unpersist pre-execution. The
@@ -1051,18 +957,17 @@ def _register_summary(df: DataFrame) -> None:
     _SUMMARY_REGISTRY.register(df)
 
 
-def knn_join_broadcast(
+def _knn_broadcast(
     points: DataFrame,
     features: DataFrame,
     k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
-    tile_size: float = TILE_SIZE,
-    max_broadcast_features: int | None = MAX_BROADCAST_FEATURES,
+    point_id: str,
+    feature_id: str,
+    tile_size: float,
 ) -> DataFrame:
     """Zero-shuffle exact kNN for broadcastable feature sets (the named-
     place dimension table stays small even at planet scale). Identical
-    semantics and bit-identical distances to :func:`knn_join` (same
+    semantics and bit-identical distances to :func:`_knn_shuffle` (same
     IEEE arithmetic, same (dist2, id) tie-break): features are bucketed
     by tile into a numpy broadcast; each points partition groups its
     points by tile (all points in a tile share one candidate set),
@@ -1076,22 +981,9 @@ def knn_join_broadcast(
     reproduces the (dist2, id) lexicographic order row-wise in one
     C-level call.
 
-    ``max_broadcast_features`` guards the driver collect: above the
-    budget this falls back to the shuffle :func:`knn_join` (identical
-    results) instead of OOMing the driver at 100x feature scale —
-    direct callers get the same protection as the
-    :func:`knn_join_auto` selector. Pass ``None`` to skip the count
-    pre-pass when the caller has already budget-checked (the count is
-    metadata-backed on parquet/Iceberg sources).
+    The driver collect is unguarded here: :func:`knn_join_auto` calls
+    this only after its count proved the feature table in budget.
     """
-    if max_broadcast_features is not None:
-        n = features.count()
-        if n > max_broadcast_features:
-            return knn_join(
-                points, features, k, point_id, feature_id, tile_size,
-                max_broadcast_features=max_broadcast_features,
-                features_count=n,
-            )
     feat_pdf = features.select(feature_id, "lon", "lat").toPandas()
     # global feature order by id: with columns pre-sorted by id, a
     # stable sort on dist2 == lexsort((id, dist2))
@@ -1214,55 +1106,6 @@ def knn_join_broadcast(
     ).mapInPandas(run, schema=out_schema)
 
 
-def auto_tile_size(
-    features: DataFrame,
-    base_tile_size: float = TILE_SIZE,
-    hot_threshold: int = 50_000,
-    max_halvings: int = 4,
-) -> float:
-    """Histogram-driven tile-size choice for the candidate prefilter —
-    the adaptive-cell-splitting idea applied to the flat join grid: if
-    the densest tile exceeds ``hot_threshold`` features, halve the
-    tile size (×4 candidate reduction in the hot spot) and re-check,
-    up to ``max_halvings``. Each probe is ONE partial-aggregated
-    count on the feature table (production reads it from cell-count
-    table stats). Smaller tiles only shrink candidate sets — the kNN
-    provable-radius test adapts via rho2, so exactness never depends
-    on the choice."""
-    ts = float(base_tile_size)
-    for _ in range(max_halvings):
-        hot = (
-            with_tiles(features, tile_size=ts)
-            .groupBy("tile_x", "tile_y")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n"))
-            .collect()[0][0]
-        ) or 0
-        if hot <= hot_threshold:
-            break
-        ts /= 2.0
-    return ts
-
-
-def knn_join_adaptive(
-    points: DataFrame,
-    features: DataFrame,
-    k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
-    base_tile_size: float = TILE_SIZE,
-    hot_threshold: int = 50_000,
-    return_tile_size: bool = False,
-):
-    """:func:`knn_join` with the tile size chosen by
-    :func:`auto_tile_size` from the feature density histogram (dense
-    urban cells → finer prefilter grid). Bit-identical results at any
-    tile size; only the candidate economics change."""
-    ts = auto_tile_size(features, base_tile_size, hot_threshold)
-    out = knn_join(points, features, k, point_id, feature_id, ts)
-    return (out, ts) if return_tile_size else out
-
-
 def knn_join_auto(
     points: DataFrame,
     features: DataFrame,
@@ -1273,25 +1116,28 @@ def knn_join_auto(
     max_broadcast_features: int = MAX_BROADCAST_FEATURES,
     return_strategy: bool = False,
 ) -> DataFrame:
-    """Strategy selector for kNN: the zero-shuffle broadcast path when
-    the feature table fits the broadcast budget (named-place dimension
-    tables stay small even at planet scale), else the shuffle path
-    (tile equi-join + provable-radius exactness + AQE skew splitting).
-    Both paths are bit-identical (same IEEE distance, same tie-break);
-    the count pre-pass is metadata-backed on parquet/Iceberg.
+    """Exact k nearest features per point → (point_id, rank, feature_id,
+    dist2) — the one public kNN entry point. Local equirectangular
+    metric (see COS_REF), ties broken by feature id — fully
+    deterministic.
+
+    Strategy: the zero-shuffle broadcast path (:func:`_knn_broadcast`)
+    when the feature table fits ``max_broadcast_features`` (named-place
+    dimension tables stay small even at planet scale), else the
+    shuffle path (:func:`_knn_shuffle`: tile equi-join +
+    provable-radius exactness + AQE skew splitting + ring-expanding
+    fallback). Both paths are bit-identical (same IEEE distance, same
+    tie-break); the count pre-pass is metadata-backed on
+    parquet/Iceberg. ``return_strategy`` also returns the choice.
     """
     n = features.count()
     if n <= max_broadcast_features:
-        # budget already checked here — skip the recount inside
-        choice, out = "broadcast", knn_join_broadcast(
-            points, features, k, point_id, feature_id, tile_size,
-            max_broadcast_features=None,
+        choice, out = "broadcast", _knn_broadcast(
+            points, features, k, point_id, feature_id, tile_size
         )
     else:
-        choice, out = "shuffle", knn_join(
-            points, features, k, point_id, feature_id, tile_size,
-            max_broadcast_features=max_broadcast_features,
-            features_count=n,
+        choice, out = "shuffle", _knn_shuffle(
+            points, features, k, point_id, feature_id, tile_size
         )
     return (out, choice) if return_strategy else out
 

@@ -20,7 +20,6 @@ from osm2shp_spark.operators.assemble import assemble_ways, assembly_counters
 from osm2shp_spark.operators.classify import classify_nodes
 from osm2shp_spark.operators.spatial import (
     dist2_expr,
-    knn_join,
     pip_join,
     tile_expr,
     tile_vector_stats,
@@ -227,16 +226,29 @@ def q_way_assembly_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - ``salted``: mega-way input routed by ``assemble_ways_auto`` onto
       the two-stage salted plan (bounded reducer keys);
-    - ``mapside``: zero-shuffle broadcast-numpy assembly on the
-      standard input.
+    - ``mapside``: the standard input through ``assemble_ways_auto``,
+      which must pick the ``general`` Catalyst path — the one
+      ``engine.run`` takes.
+
+    The ``strategy`` labels are frozen oracle text: ``mapside`` names a
+    since-removed broadcast-numpy variant, not the path it runs now.
     """
+    from osm2shp_spark.operators.assemble import assemble_ways_auto
+
     salted = q_way_assembly_salted(spark, sf_dir).select(
         F.lit("salted").alias("strategy"), "*"
     )
-    mapside = q_way_assembly_mapside(spark, sf_dir).select(
+    assembled, choice = assemble_ways_auto(
+        synthetic_nodes(spark, sf_dir),
+        synthetic_ways(spark, sf_dir),
+        return_strategy=True,
+        defer_filters=True,
+    )
+    assert choice == "general", choice
+    general = _assembly_scalar_projection(assembled).select(
         F.lit("mapside").alias("strategy"), "*"
     )
-    return salted.unionByName(mapside)
+    return salted.unionByName(general)
 
 
 @register("resumable_node_export", lambda: _NODE_EXPORT_ORACLE)
@@ -640,6 +652,14 @@ SELECT image_id, "rank", node_id, dist2 FROM r WHERE "rank" <= 3
 """
 
 
+def _knn_places_inputs(spark: SparkSession, sf_dir: str):
+    imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
+    places = classify_nodes(synthetic_nodes(spark, sf_dir)).select(
+        "node_id", "lon", "lat"
+    )
+    return imgs, places
+
+
 @register("knn_places", _KNN_ORACLE)
 def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-NN nearest named place per image point, checked against
@@ -649,45 +669,15 @@ def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     every sandbox scale, so the selector picks the zero-shuffle
     numpy-bucket path; above :data:`MAX_BROADCAST_FEATURES` it routes
     to the shuffle tile-join path, which stays driver-gated via
-    ``knn_places_strategies`` (adaptive variant) and oversize-tested in
-    tests/test_spatial.py. Both paths are bit-identical by
-    construction (same IEEE distance arithmetic, same (dist2, id)
-    tie-break), so the oracle hash is strategy-independent."""
+    ``knn_places_strategies`` (its ``adaptive`` row forces a zero
+    budget) and plan-tested in tests/test_spatial.py. Both paths are
+    bit-identical by construction (same IEEE distance arithmetic, same
+    (dist2, id) tie-break), so the oracle hash is
+    strategy-independent."""
     from osm2shp_spark.operators.spatial import knn_join_auto
 
-    imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
-    places = classify_nodes(synthetic_nodes(spark, sf_dir)).select(
-        "node_id", "lon", "lat"
-    )
+    imgs, places = _knn_places_inputs(spark, sf_dir)
     return knn_join_auto(imgs, places, k=3)
-
-
-def q_knn_places_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle broadcast kNN path (same oracle as knn_places —
-    bit-identical results required). Gated via ``knn_places_strategies``."""
-    from osm2shp_spark.operators.spatial import knn_join_broadcast
-
-    imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
-    places = classify_nodes(synthetic_nodes(spark, sf_dir)).select(
-        "node_id", "lon", "lat"
-    )
-    return knn_join_broadcast(imgs, places, k=3)
-
-
-def q_knn_places_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N6 adaptive path through the gate: the density histogram picks
-    the prefilter tile size (dense hot cluster in the fixture → finer
-    grid), then the same provably-exact kNN. Same oracle as knn_places
-    — exactness is tile-size independent by construction, so a
-    histogram/threshold bug that broke candidate completeness breaks
-    the value hash. Gated via ``knn_places_strategies``."""
-    from osm2shp_spark.operators.spatial import knn_join_adaptive
-
-    imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
-    places = classify_nodes(synthetic_nodes(spark, sf_dir)).select(
-        "node_id", "lon", "lat"
-    )
-    return knn_join_adaptive(imgs, places, k=3, hot_threshold=50)
 
 
 _KNN_STRATEGIES_ORACLE = f"""
@@ -699,41 +689,29 @@ SELECT 'adaptive' AS strategy, t.* FROM ({_KNN_ORACLE}) t
 
 @register("knn_places_strategies", _KNN_STRATEGIES_ORACLE)
 def q_knn_places_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both alternative kNN physical strategies in ONE gate row (driver
-    50-entry window; see way_assembly_strategies). Each side runs its
-    full plan — the zero-shuffle broadcast-numpy path and the
-    density-histogram adaptive-tile path — and both must reproduce the
-    brute-force SQL result bit-for-bit."""
-    bcast = q_knn_places_broadcast(spark, sf_dir).select(
+    """Both kNN physical strategies of ``knn_join_auto`` in ONE gate row
+    (driver 50-entry window; see way_assembly_strategies). Each side
+    runs its full plan and must reproduce the brute-force SQL result
+    bit-for-bit:
+
+    - ``broadcast``: the selector with its defaults (the zero-shuffle
+      broadcast-numpy path);
+    - ``adaptive``: the selector with a zero broadcast budget, which
+      forces the shuffle tile-join path plus ring expansion.
+
+    The ``strategy`` labels are frozen oracle text: ``adaptive`` names
+    a since-removed density-driven variant, not the path it runs now.
+    """
+    from osm2shp_spark.operators.spatial import knn_join_auto
+
+    imgs, places = _knn_places_inputs(spark, sf_dir)
+    bcast = knn_join_auto(imgs, places, k=3).select(
         F.lit("broadcast").alias("strategy"), "*"
     )
-    adapt = q_knn_places_adaptive(spark, sf_dir).select(
-        F.lit("adaptive").alias("strategy"), "*"
-    )
-    return bcast.unionByName(adapt)
-
-
-def q_way_assembly_mapside(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle assembly path through the gate: staged nodes
-    broadcast as three numpy arrays, one mapInPandas pass does the
-    ref lookup + ordered assembly + all-or-nothing rule in place (no
-    explode, no join shuffle, no groupBy). Same path-independent
-    oracle as way_assembly — the searchsorted lookup, positional
-    fan-out and integrity drop must reproduce the Catalyst plan's
-    rows exactly. Gated via ``way_assembly_strategies``."""
-    from osm2shp_spark.operators.assemble import assemble_ways_mapside
-
-    nodes = synthetic_nodes(spark, sf_dir)
-    ways = synthetic_ways(spark, sf_dir)
-    # max_broadcast_nodes=None: the gate fixture's node count is
-    # bounded by construction (sources/synthetic.py), and the default
-    # guard's count() pre-pass would re-run the synthetic generation
-    # pipeline — a second full input pass — just to prove it
-    return _assembly_scalar_projection(
-        assemble_ways_mapside(
-            nodes, ways, max_broadcast_nodes=None, defer_filters=True
-        )
-    )
+    shuffle = knn_join_auto(
+        imgs, places, k=3, max_broadcast_features=0
+    ).select(F.lit("adaptive").alias("strategy"), "*")
+    return bcast.unionByName(shuffle)
 
 
 _TILE_JOIN_ORACLE = f"""

@@ -1,6 +1,7 @@
 """Unit tests for classification + assembly semantics on hand-built
 micro-fixtures (the reference edge cases, SURVEY §5.2), plus
-equivalence of the zero-shuffle map-side path with the Catalyst path."""
+equivalence of the exchange-diet and auto-selected paths with the
+default Catalyst path."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 from conftest import SF_SMALL
 from parity import canon_rows
 
-from osm2shp_spark.operators.assemble import assemble_ways, assemble_ways_mapside
+from osm2shp_spark.operators.assemble import assemble_ways
 from osm2shp_spark.operators.classify import (
     assert_unique_node_ids,
     classify_nodes,
@@ -151,30 +152,6 @@ class TestNodeClassification:
         assert assert_unique_node_ids(nodes) == 1
 
 
-class TestMapsidePathEquivalence:
-    def test_same_result_as_catalyst_path(self, spark):
-        nodes = synthetic_nodes(spark, SF_SMALL)
-        ways = synthetic_ways(spark, SF_SMALL)
-        a = assemble_ways(nodes, ways).toPandas()
-        b = assemble_ways_mapside(nodes, ways).toPandas()
-        assert canon_rows(a) == canon_rows(b)
-
-    def test_over_budget_falls_back_to_general_path(self, spark):
-        """A direct call above the node-broadcast budget must NOT
-        collect the node table to the driver (the 100x-scale OOM): it
-        routes to the general Catalyst path with identical rows."""
-        nodes = synthetic_nodes(spark, SF_SMALL)
-        ways = synthetic_ways(spark, SF_SMALL)
-        a = assemble_ways(nodes, ways).toPandas()
-        b = assemble_ways_mapside(nodes, ways, max_broadcast_nodes=10).toPandas()
-        assert canon_rows(a) == canon_rows(b)
-        # the fallback plan is the shuffle join, not mapInPandas
-        plan = assemble_ways_mapside(
-            nodes, ways, max_broadcast_nodes=10
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" not in plan
-
-
 class TestOrderInvariance:
     def test_input_order_invariance(self, spark):
         # property the reference LACKS (it depends on nodes physically
@@ -219,74 +196,6 @@ class TestCompactPosEquivalence:
         assert canon_rows(out.toPandas()) == canon_rows(
             assemble_ways(nodes, ways).toPandas()
         )
-
-
-class TestQuantizedExchange:
-    """The packed-bigint coord diet (assemble_ways(quantized=True)) must
-    be BIT-exact on PBF-regime coordinates — doubles produced by the
-    public PBF decode formula 1e-9 * (granularity * value)
-    (sources/osmpbf.py:215) — including negative coords (sign bits
-    through the shift/mask) and the ±180/±90 boundary."""
-
-    def _pbf_coord(self, n: int) -> float:
-        return 1e-9 * (100 * n)  # granularity 100, offset 0
-
-    def test_bit_exact_on_pbf_coords(self, spark):
-        # extremes, negatives near zero, and arbitrary interior values
-        ints = [
-            (1, -1800000000, -900000000),
-            (2, 1800000000, 900000000),
-            (3, -1, 1),
-            (4, 87654321, -49999999),
-            (5, 123456789, 471234567),
-            (6, -979999999, 13),
-        ]
-        rows = [
-            (i, self._pbf_coord(lo), self._pbf_coord(la), {})
-            for i, lo, la in ints
-        ]
-        nodes = _nodes(spark, rows)
-        ways = _ways(
-            spark,
-            [(10, [1, 2, 3, 4, 5, 6], {"highway": "motorway"})],
-        )
-        a = assemble_ways(nodes, ways).collect()[0]
-        b = assemble_ways(nodes, ways, quantized=True).collect()[0]
-        # exact float equality, not approx: the decode must reproduce
-        # the ingested doubles bit-for-bit
-        assert list(b.lons) == list(a.lons)
-        assert list(b.lats) == list(a.lats)
-        assert (b.way_id, b.layer, b.kind, b.n_pts) == (
-            a.way_id, a.layer, a.kind, a.n_pts,
-        )
-
-    def test_quantized_with_compact_pos_full_table(self, spark):
-        """Both diets together on the synthetic tables, pre-quantized to
-        the PBF grid: same rows as the default path on that input."""
-        nodes = synthetic_nodes(spark, SF_SMALL).withColumn(
-            "lon", F.expr("cast(round(lon * 1e7) as bigint) * 100L * 1e-9")
-        ).withColumn(
-            "lat", F.expr("cast(round(lat * 1e7) as bigint) * 100L * 1e-9")
-        )
-        ways = synthetic_ways(spark, SF_SMALL)
-        a = assemble_ways(nodes, ways).toPandas()
-        b = assemble_ways(
-            nodes, ways, compact_pos=True, quantized=True
-        ).toPandas()
-        assert canon_rows(a) == canon_rows(b)
-
-
-def test_mapside_empty_node_table_returns_empty(spark):
-    """An empty staged-node build side must yield zero rows (the
-    all-or-nothing rule), not an IndexError from indexing a zero-length
-    sorted-id array inside mapInPandas."""
-    from osm2shp_spark.operators.assemble import assemble_ways_mapside
-
-    nodes = spark.createDataFrame(
-        [], "id BIGINT, lon DOUBLE, lat DOUBLE, tags MAP<STRING,STRING>"
-    )
-    ways = synthetic_ways(spark, SF_SMALL)
-    assert assemble_ways_mapside(nodes, ways, max_broadcast_nodes=None).count() == 0
 
 
 def test_rule_sql_escapes_quotes(spark):

@@ -142,6 +142,21 @@ class TestImageOperators:
         assert df.thumb.map(len).eq(16).all()
         assert df.contrast.gt(0).all()
 
+    def test_image_table_equals_driver_fixture(self, spark):
+        """The distributed generator builds each row on the executor
+        that owns its index; every row must equal the driver-side
+        ``generate_images_pdf`` row — encoded bytes, phash and lon/lat
+        bit for bit. 37 rows do not divide evenly over the partitions."""
+        def rows(pdf):
+            pdf = pdf.sort_values("image_id").reset_index(drop=True)
+            return pdf.assign(bytes=pdf["bytes"].map(bytes))
+
+        got = rows(image_table(spark, 37).toPandas())
+        want = rows(generate_images_pdf(37))
+        assert len(got) == 37 and list(got.columns) == list(want.columns)
+        for c in want.columns:
+            assert got[c].tolist() == want[c].tolist(), c
+
     def test_phash_near_dups_recall(self, spark):
         pdf = generate_images_pdf(50)
         # inject perceptual near-dups: same pixels re-encoded (phash

@@ -132,15 +132,9 @@ def test_auto_strategy_selection(spark):
 
     nodes = synthetic_nodes(spark, SF_SMALL)
     ways = synthetic_ways(spark, SF_SMALL)
-    # default: the Catalyst general path (local shuffles are
-    # memory-speed; mapside is the opt-in for network-shuffle clusters)
+    # default: the Catalyst general path
     df, strategy = assemble_ways_auto(nodes, ways, return_strategy=True)
     assert strategy == "general"
-    # zero-shuffle opt-in with a small node table -> mapside
-    df, strategy = assemble_ways_auto(
-        nodes, ways, prefer_zero_shuffle=True, return_strategy=True
-    )
-    assert strategy == "mapside"
     assert canon_rows(df.toPandas()) == canon_rows(
         assemble_ways(nodes, ways).toPandas()
     )

@@ -13,7 +13,11 @@ from parity import canon_rows
 from osm2shp_spark.functions import geometry as G
 from osm2shp_spark.functions.udfs import with_geometry_meta, with_point_cells
 from osm2shp_spark.operators.assemble import assemble_ways
-from osm2shp_spark.operators.spatial import knn_join, pip_join, tile_vector_stats
+from osm2shp_spark.operators.spatial import (
+    knn_join_auto,
+    pip_join,
+    tile_vector_stats,
+)
 from osm2shp_spark.sources.synthetic import (
     synthetic_images,
     synthetic_nodes,
@@ -92,21 +96,31 @@ def test_pip_jvm_refine_equals_arrow_refine(spark):
 
 def test_knn_fallback_engages_and_stays_exact(spark):
     """Tiny tile size forces most points through the provable-radius
-    escape; result must still equal brute force."""
+    escape of the shuffle path; result must still equal brute force."""
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
     ).limit(50)
-    a = knn_join(imgs, nodes, k=2, tile_size=0.001).toPandas()
-    b = knn_join(imgs, nodes, k=2, tile_size=10.0).toPandas()  # one tile: pure brute
+    a = knn_join_auto(
+        imgs, nodes, k=2, tile_size=0.001, max_broadcast_features=0
+    ).toPandas()
+    b = knn_join_auto(  # one tile: pure brute
+        imgs, nodes, k=2, tile_size=10.0, max_broadcast_features=0
+    ).toPandas()
     assert canon_rows(a) == canon_rows(b)
 
 
 def test_knn_summary_cache_bounded_across_calls(spark):
-    """knn_join persists its per-point top-k summary; repeated calls in
-    one session must not leak one O(points) CacheManager entry per call
-    — the live-summary registry evicts beyond its bound, and eviction
-    does not break a still-held result (it recomputes, bit-identical)."""
+    """The kNN shuffle path persists its per-point top-k summary;
+    repeated calls in one session must not leak one O(points)
+    CacheManager entry per call — the live-summary registry evicts
+    beyond its bound, and eviction does not break a still-held result
+    (it recomputes, bit-identical). The globe-sized tile resolves every
+    point in the first pass, so no ring-expansion localCheckpoint RDD
+    adds to the persistent-RDD count. Only RDDs persisted during this
+    test count: ring rounds of earlier kNN calls in the session (the
+    gate's shuffle-path row, the fallback tests) leave localCheckpoint
+    RDDs that clearCache does not drop."""
     from osm2shp_spark.operators import spatial as S
 
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
@@ -115,13 +129,21 @@ def test_knn_summary_cache_bounded_across_calls(spark):
     ).limit(50)
     spark.catalog.clearCache()
     S._LIVE_SUMMARIES.clear()
-    first = knn_join(imgs, nodes, k=2)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+
+    def knn():
+        return knn_join_auto(
+            imgs, nodes, k=2, tile_size=1000.0, max_broadcast_features=0
+        )
+
+    first = knn()
     expect = canon_rows(first.toPandas())
     for _ in range(S._MAX_LIVE_SUMMARIES + 2):
-        assert knn_join(imgs, nodes, k=2).count() > 0
+        assert knn().count() > 0
     assert len(S._LIVE_SUMMARIES) == S._MAX_LIVE_SUMMARIES
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().size() <= S._MAX_LIVE_SUMMARIES
+    added = set(jsc.getPersistentRDDs().keys()) - before
+    assert len(added) <= S._MAX_LIVE_SUMMARIES
     # `first`'s summary was evicted above; re-executing it must
     # recompute and still match
     assert canon_rows(first.toPandas()) == expect
@@ -134,7 +156,7 @@ def test_knn_oversize_fallback_never_broadcasts_features(spark):
     the very regime where the planner refused to broadcast it. A tiny
     tile size forces most points through the fallback, so the ring
     path actually runs (multiple widening rounds), and the rows must
-    equal the in-budget broadcast fallback's bit for bit."""
+    equal the in-budget broadcast path's bit for bit."""
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
@@ -142,7 +164,7 @@ def test_knn_oversize_fallback_never_broadcasts_features(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        over = knn_join(
+        over = knn_join_auto(
             imgs, nodes, k=2, tile_size=0.001, max_broadcast_features=10
         )
         plan = over._jdf.queryExecution().explainString(
@@ -151,7 +173,7 @@ def test_knn_oversize_fallback_never_broadcasts_features(spark):
             )
         )
         assert "BroadcastExchange" not in plan
-        under = knn_join(imgs, nodes, k=2, tile_size=0.001)
+        under = knn_join_auto(imgs, nodes, k=2, tile_size=0.001)
         assert canon_rows(over.toPandas()) == canon_rows(under.toPandas())
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -168,32 +190,31 @@ def test_knn_no_fallback_subtree_when_all_resolved(spark):
         F.col("id").alias("node_id"), "lon", "lat"
     )
     # one globe-sized tile: every point sees every feature, all resolve
-    out = knn_join(imgs, nodes, k=2, tile_size=1000.0)
+    out = knn_join_auto(
+        imgs, nodes, k=2, tile_size=1000.0, max_broadcast_features=0
+    )
     plan = out._jdf.queryExecution().explainString(
         out._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
-    # the brute subtree's signature nodes: the broadcast cross join and
-    # its row_number window ("Union" would be ambiguous — the synthetic
-    # node fixture itself contains one)
+    # no fallback signature nodes: no broadcast cross join, no window,
+    # and no ring-round checkpoint scan ("Union" would be ambiguous —
+    # the synthetic node fixture itself contains one)
     assert "BroadcastNestedLoopJoin" not in plan and "Window" not in plan
     assert out.count() > 0
 
 
 def test_knn_broadcast_oversize_falls_back_to_shuffle(spark):
-    """knn_join_broadcast must guard its own driver collect: above the
-    feature budget it routes to the shuffle knn_join (identical rows)
-    instead of toPandas()-ing an unbounded table — protection for
-    direct callers, not just the knn_join_auto selector."""
-    from osm2shp_spark.operators.spatial import knn_join_broadcast
-
+    """The kNN selector guards the broadcast path's driver collect:
+    above the feature budget it routes to the shuffle path (identical
+    rows) instead of toPandas()-ing an unbounded table."""
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
     ).limit(50)
-    over = knn_join_broadcast(imgs, nodes, k=2, max_broadcast_features=10)
-    under = knn_join_broadcast(imgs, nodes, k=2)
+    over = knn_join_auto(imgs, nodes, k=2, max_broadcast_features=10)
+    under = knn_join_auto(imgs, nodes, k=2)
     # the oversize call must NOT be the mapInPandas broadcast plan
     plan = over._jdf.queryExecution().explainString(
         over._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -265,38 +286,6 @@ def test_pip_s2_equals_flat_grid(spark):
         ).toPandas()
     )
     assert a == c
-
-
-def test_knn_adaptive_tile_size(spark):
-    """The density histogram must drive the tile size finer under the
-    fixture's deliberate hot cluster, and the result must stay
-    bit-identical to the fixed-size path (exactness is tile-size
-    independent by the provable-radius construction)."""
-    from parity import canon_rows
-
-    from osm2shp_spark.operators.spatial import (
-        TILE_SIZE,
-        knn_join,
-        knn_join_adaptive,
-    )
-    from osm2shp_spark.sources.synthetic import synthetic_images, synthetic_nodes
-    from conftest import SF_SMALL
-
-    imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
-    feats = (
-        synthetic_nodes(spark, SF_SMALL)
-        .filter("id > 0")
-        .selectExpr("id AS node_id", "lon", "lat")
-    )
-    # the nodes fixture packs ~10% of points into a 0.01x0.01 deg cell:
-    # with a tiny threshold the histogram must react
-    out, ts = knn_join_adaptive(
-        imgs, feats, k=3, hot_threshold=5, return_tile_size=True
-    )
-    assert ts < TILE_SIZE
-    assert canon_rows(out.toPandas()) == canon_rows(
-        knn_join(imgs, feats, k=3, tile_size=TILE_SIZE).toPandas()
-    )
 
 
 def test_pnpoly_sql_bit_parity_randomized(spark):
@@ -387,10 +376,9 @@ def test_pnpoly_sql_matches_kernel_at_huge_coordinates(spark):
     assert [got[i] for i in range(len(px))] == expect.tolist()
 
 
-class TestKnnTileWindow:
-    """The exchange-reuse window spec (tile_window) must be invisible in
-    results and visible in the plan (one fewer Exchange in the shuffle-
-    join regime)."""
+class TestKnnShufflePlan:
+    """The kNN shuffle path keys its top-k aggregate by tile, so the
+    candidate set never re-shuffles after the tile join."""
 
     def _inputs(self, spark):
         imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
@@ -402,24 +390,7 @@ class TestKnnTileWindow:
         )
         return imgs, nodes
 
-    def test_tile_window_results_identical(self, spark):
-        imgs, nodes = self._inputs(spark)
-        a = knn_join(imgs, nodes, k=2, tile_window=True).toPandas()
-        b = knn_join(imgs, nodes, k=2, tile_window=False).toPandas()
-        assert canon_rows(a) == canon_rows(b)
-
-    def test_tile_window_results_identical_shuffle_regime(self, spark):
-        imgs, nodes = self._inputs(spark)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            a = knn_join(imgs, nodes, k=2, tile_window=True).toPandas()
-            b = knn_join(imgs, nodes, k=2, tile_window=False).toPandas()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert canon_rows(a) == canon_rows(b)
-
-    def test_tile_window_drops_an_exchange(self, spark, monkeypatch):
+    def test_topk_aggregate_reuses_join_partitioning(self, spark, monkeypatch):
         """With broadcast disabled, HashPartitioning(tile) satisfies the
         tile-keyed top-k aggregate's ClusteredDistribution (subset
         rule) — candidates must never re-shuffle between the join and
@@ -449,16 +420,16 @@ class TestKnnTileWindow:
             )
 
         try:
-            pa = simple_plan(knn_join(imgs, nodes, k=2, tile_window=True))
-            pb = simple_plan(knn_join(imgs, nodes, k=2, tile_window=False))
+            plan = simple_plan(
+                knn_join_auto(imgs, nodes, k=2, max_broadcast_features=0)
+            )
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
         def exchange_under_topk_agg(plan: str, key_marker: str) -> bool:
-            """True if the top-k aggregate (the only collect_list agg in
-            knn_join) re-shuffles candidates: walking down from each
-            FINAL collect_list aggregate whose keys contain
-            ``key_marker``, an Exchange before the partial aggregate
+            """True if a FINAL collect_list aggregate whose keys
+            contain ``key_marker`` re-shuffles its candidates: walking
+            down from it, an Exchange before the partial aggregate
             means the candidate set crossed the wire."""
             lines = plan.splitlines()
             hits = []
@@ -481,26 +452,8 @@ class TestKnnTileWindow:
 
         # tile-keyed aggregate rides the join's HashPartitioning(tile):
         # the full-candidate-set exchange must be gone ...
-        assert not exchange_under_topk_agg(pa, "tile_x")
-        # ... while the bare-_pid aggregate under a forced shuffle join
-        # re-shuffles every candidate row (the config the gate avoids)
-        assert exchange_under_topk_agg(pb, "_pid")
-
-    def test_auto_gate_follows_broadcast_decision(self, spark):
-        from osm2shp_spark.operators.spatial import (
-            _resolve_tile_window,
-            with_tiles,
-        )
-
-        imgs, nodes = self._inputs(spark)
-        feats = with_tiles(nodes).select("node_id", "lon", "lat", "tile_x", "tile_y")
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            assert _resolve_tile_window(spark, feats) is True
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-            assert _resolve_tile_window(spark, feats) is True
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "8GB")
-            assert _resolve_tile_window(spark, feats) is False
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert not exchange_under_topk_agg(plan, "tile_x")
+        # ... while the fixture's unresolved points run ring rounds
+        # whose bare-_pid aggregate follows a (_sx, _sy) join and does
+        # re-shuffle — the control that the walk above sees exchanges
+        assert exchange_under_topk_agg(plan, "_pid")

@@ -240,81 +240,6 @@ def test_stratified_sample_negative_keys_respect_quota(spark):
     assert key(got) == key(want)
 
 
-def test_fast_shingle_udfs_match_per_doc_reference(spark):
-    """r6 (VERDICT r5 #2): the batch-vectorized shingle/minhash/simhash
-    path must be VALUE-identical to the per-document reference
-    implementation — through Spark, on real fixture docs, including
-    empty/short documents."""
-    import pandas as pd
-
-    from osm2shp_spark.operators.dedup import (
-        _HA,
-        _HB,
-        _MERSENNE_P,
-        _shingle_hashes,
-        minhash_signature_udf,
-        simhash_udf,
-    )
-
-    docs = Q._docs_aug(spark, SF_SMALL).limit(200)
-    pdf = docs.select("doc_id", "text").toPandas()
-    extra = pd.DataFrame(
-        {"doc_id": [9000001, 9000002, 9000003],
-         "text": ["", "one", "one two"]}
-    )
-    pdf = pd.concat([pdf, extra], ignore_index=True)
-    sdf = spark.createDataFrame(pdf)
-
-    got = (
-        sdf.select(
-            "doc_id",
-            minhash_signature_udf(3)("text").alias("sig"),
-            simhash_udf()("text").alias("sh"),
-        )
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    for doc_id, text in zip(pdf.doc_id, pdf.text):
-        sh = _shingle_hashes(text or "", 3)
-        v = ((_HA[:, None] * (sh[None, :] % _MERSENNE_P)) + _HB[:, None]) % np.uint64(
-            _MERSENNE_P
-        )
-        want_sig = v.min(axis=1).astype(np.int64)
-        assert (np.array(got.loc[doc_id, "sig"]) == want_sig).all(), doc_id
-        hs = _shingle_hashes(text or "", 1)
-        bits = (
-            (hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & 1
-        ).astype(np.int32)
-        acc = (2 * bits - 1).sum(axis=0)
-        pos = np.flatnonzero(acc > 0).astype(np.uint64)
-        want_sh = (
-            np.int64(np.bitwise_or.reduce(np.uint64(1) << pos).astype(np.int64))
-            if pos.size
-            else np.int64(0)
-        )
-        assert got.loc[doc_id, "sh"] == want_sh, doc_id
-
-
-def test_fast_near_dup_paths_catch_exact_dups(spark):
-    """The Arrow-UDF fast twins (crc32 shingles) keep their banding
-    recall: identical normalized texts always collide."""
-    from osm2shp_spark.operators.dedup import (
-        minhash_near_dups_fast,
-        simhash_near_dups_fast,
-    )
-
-    docs = Q._docs_aug(spark, SF_SMALL)
-    dups = Q.q_exact_dedup(spark, SF_SMALL).toPandas()
-    want_groups = int((dups.n_dups > 1).sum())
-    assert want_groups > 0
-    mh = minhash_near_dups_fast(docs, threshold=0.99).toPandas()
-    sh = simhash_near_dups_fast(docs, max_hamming=0).toPandas()
-    assert len(mh) >= want_groups
-    assert len(sh) >= want_groups
-
-
-
 def test_cosine_topk_numpy_path_bit_identical_to_sql(spark):
     """r6: the broadcast-numpy cosine scorer must reproduce the SQL
     fold path bit for bit — same cosines (IEEE order preserved), same
